@@ -3,39 +3,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def makeSession(): SparkSession = {
-      // initialPartitionNum: the cluster-side knob for data-scaled
-      // shuffle granularity (set ≈ input/128 MB on a real cluster). The
-      // default stays = cpus on this box: the sf10 A/B measured 8× cpus
-      // as PURE overhead — no benefit at sf10 (292.8 → 354.8 s on the
-      // string-keyed exactjoin; the md5-long hashing was the real fix)
-      // and a 1.4–3× regression at sf0.1 on iterative/persisted queries
-      // (events_rfm 3.7 → 9.3 s, orders_pareto 2.2 → 6.6 s: persisted
-      // and checkpointed frames keep the inflated partition count and
-      // every round pays the tiny-task scheduling, which AQE's
-      // post-shuffle coalescing cannot reach).
-      val initParts = sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS", cpus)
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          initParts)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    // optional comma-separated query filter — fresh-JVM measurement of a
+    // subset (the scale experiments re-time outliers in isolation: one
+    // long-lived session accumulates cache/GC state that can inflate
+    // later queries several-fold at 10× data; see SCALE.md)
+    val selected = SparkEntry.selectQueries(
+      sys.env.get("SPARK_GRAFT_BENCH_ONLY").toSeq.flatMap(_.split(",")))
+    def makeSession(): SparkSession = Sessions.create("graft-bench", sys.env)
     var spark = makeSession()
-    // noop sink, NOT count(): under a bare count Catalyst prunes every
-    // column, so projection-only queries would time a row count instead of
-    // the actual computation
-    def exhaust(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-                dir: String): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
     // min-of-REPS with NO separate warm-up pass: the first timed run IS the
     // warm-up (JIT + codegen + file listing + page cache) and the min
     // discards it — same wall-clock as warm-up + (REPS-1) timed passes,
@@ -74,16 +49,6 @@ object Bench {
     // worst movers still get fresh-session re-times.
     val sweepBudget = budgetSecs *
       sys.env.getOrElse("SPARK_GRAFT_BENCH_SWEEP_FRAC", "0.6").toDouble
-    // optional comma-separated query filter — fresh-JVM measurement of a
-    // subset (the scale experiments re-time outliers in isolation: one
-    // long-lived session accumulates cache/GC state that can inflate
-    // later queries several-fold at 10× data; see SCALE.md)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
     // between-query session hygiene, OUTSIDE the timers: streaming drains
     // leave their memory-sink tables in the catalog (a 10×-scale run pins
     // millions of sink rows on the heap for the rest of the suite) and the
@@ -114,9 +79,19 @@ object Bench {
     } catch { case _: Throwable => Map.empty }
     val suiteStart = System.nanoTime()
     def elapsedSecs: Double = (System.nanoTime() - suiteStart) / 1e9
-    def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // a query that throws is timed as however long it took to throw, so
+    // its name and first error are kept: the run reports them and exits 1
+    val failures = collection.mutable.LinkedHashMap.empty[String, String]
+    def timeOnce(name: String): Double = {
       val t0 = System.nanoTime()
-      try exhaust(fn, sfDir) catch { case _: Throwable => () }
+      // noop sink, NOT count(): under a bare count Catalyst prunes every
+      // column, so projection-only queries would time a row count instead
+      // of the actual computation
+      try selected(name)(spark, sfDir).write.format("noop")
+        .mode("overwrite").save()
+      catch { case e: Throwable =>
+        if (!failures.contains(name)) failures(name) = String.valueOf(e)
+      }
       val t = (System.nanoTime() - t0) / 1e9
       // hygiene BETWEEN REPS, not just between queries (outside the timer):
       // persist-heavy queries (the dedup exactjoins persist a candidate
@@ -134,14 +109,14 @@ object Bench {
     // re-time pass then lacked). Skip its remaining reps and DEFER it to
     // the reserved re-time pass, which runs under a fresh session.
     val mustRetime = collection.mutable.Set.empty[String]
-    val firstPass = selected.map { case (name, fn) =>
+    val firstPass = selected.map { case (name, _) =>
       val overBudget = elapsedSecs > sweepBudget
-      val t1 = timeOnce(fn)
+      val t1 = timeOnce(name)
       val stalled = cleanMap.get(name).exists(c => c > 0.05 && t1 > 5.0 * c)
       if (stalled) mustRetime += name
       val times =
         if (overBudget || stalled) Seq(t1)
-        else t1 +: (1 until reps).map(_ => timeOnce(fn))
+        else t1 +: (1 until reps).map(_ => timeOnce(name))
       name -> times.min
     }
     // OUTLIER RE-TIME PASS: min-of-REPS is defenseless when one scheduler
@@ -222,7 +197,7 @@ object Bench {
             else { unknownUsed = true; true }
         }
         if (admit) {
-          val t = timeOnce(selected(name))
+          val t = timeOnce(name)
           retimed(name) = retimed.getOrElse(name, 0) + 1
           if (t < cur) results(name) = t
         }
@@ -240,7 +215,7 @@ object Bench {
           // 2× + 5 s headroom so the official line always prints in budget
           if (elapsedSecs + 2.0 * cur + 5.0 > budgetSecs) budgetLeft = false
           else if (cur > 0.5 && retimed.getOrElse(name, 0) < 3) {
-            val t = timeOnce(selected(name))
+            val t = timeOnce(name)
             retimed(name) = retimed.getOrElse(name, 0) + 1
             if (t < cur) {
               results(name) = t
@@ -303,5 +278,13 @@ object Bench {
     val mvc = medianVsClean.map(fmt).getOrElse("null")
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nq":${results.size},"retimed":${retimed.size},"median_vs_clean":$mvc,"shown":$shown,"queries":{${sb.toString}},"sf":"$sfDir"}""")
     spark.stop()
+    if (failures.nonEmpty) {
+      failures.foreach { case (name, err) =>
+        System.err.println(s"[bench] $name failed: $err")
+      }
+      System.err.println(
+        s"[bench] failed queries: ${failures.keys.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

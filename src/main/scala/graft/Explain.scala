@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan for the named
   * queries (or all). Used to keep the plans honest: filters pushed to scans,
   * minimal ReadSchema, broadcasts where a side is small, wide
@@ -12,20 +10,11 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.drop(1).toSeq
-                else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
+    val selected = SparkEntry.selectQueries(args.drop(1).toSeq)
+    val spark = Sessions.create("graft-explain", sys.env)
+    selected.toSeq.sortBy(_._1).foreach { case (n, fn) =>
       println(s"\n========== $n ==========")
-      try println(SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(
+      try println(fn(spark, sfDir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
       catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
     }

@@ -125,15 +125,26 @@ object Settings {
   /** Spark tuning (settings.py:103-105): master defaults to the engine's
     * local[N] (reference default is local[1]); executor/driver memory are
     * only APPLIED when the env sets them — in local mode a reference-
-    * default 2g/512m would shrink the JVM rather than match it. */
+    * default 2g/512m would shrink the JVM rather than match it. `cpus`
+    * (`SPARK_GRAFT_CPUS`, default: the JVM's available processors) sizes
+    * both the local master and the shuffle partition count. */
   final case class SparkTuning(master: String,
+                               cpus: Int,
                                executorMemory: Option[String],
                                driverMemory: Option[String])
 
-  def sparkTuning(env: Map[String, String]): SparkTuning =
+  def sparkTuning(env: Map[String, String]): SparkTuning = {
+    val cpus = env.get("SPARK_GRAFT_CPUS").filter(_.nonEmpty) match {
+      case None => Runtime.getRuntime.availableProcessors
+      case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
     SparkTuning(
       master = env.get("SPARK_MASTER").filter(_.nonEmpty)
-        .getOrElse(s"local[${env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"),
+        .getOrElse(s"local[$cpus]"),
+      cpus = cpus,
       executorMemory = env.get("SPARK_EXECUTOR_MEMORY").filter(_.nonEmpty),
       driverMemory = env.get("SPARK_DRIVER_MEMORY").filter(_.nonEmpty))
+  }
 }

@@ -69,22 +69,19 @@ object SparkEntry {
     * probe batch). */
   private val fanOutKey =
     Map("documents" -> "doc_id", "events" -> "event_id")
-  /** Fan-out A/B switch (off|auto) and the data-relative partition
-    * quantum: the fan target is `inputBytes / quantum`, capped at the
-    * session's cores — so the task count scales with the DATA, never
-    * with the box alone, and a tiny probe input (sf0.001/sf0.01) stops
-    * producing `cores` near-empty partitions whose scheduling overhead
-    * exceeds their work. 16 KiB of compressed text per task ≈ 250 docs
-    * ≈ 100s of ms of shingle/token kernel work — enough to amortize a
-    * task launch many times over; at a §6-compliant production layout
-    * (≥128 MB files/row groups) the scan already plans ≥ cores splits
-    * and the whole guard is the identity. */
-  private val fanOutMode = sys.env.getOrElse("SPARK_GRAFT_FANOUT", "auto")
-  private val fanQuantumBytes =
-    sys.env.getOrElse("SPARK_GRAFT_FAN_QUANTUM_BYTES", "16384").toLong
+  /** The data-relative partition quantum: the fan target is
+    * `inputBytes / quantum`, capped at the session's cores — so the task
+    * count scales with the DATA, never with the box alone, and a tiny
+    * probe input (sf0.001/sf0.01) stops producing `cores` near-empty
+    * partitions whose scheduling overhead exceeds their work. 16 KiB of
+    * compressed text per task ≈ 250 docs ≈ 100s of ms of shingle/token
+    * kernel work — enough to amortize a task launch many times over; at
+    * a §6-compliant production layout (≥128 MB files/row groups) the scan
+    * already plans ≥ cores splits and the whole guard is the identity.
+    * A 57-query fan-out on/off A/B chose this policy over no fan-out. */
+  private val fanQuantumBytes = 16384L
   private def tFan(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = t(s, dir, name)
-    if (fanOutMode == "off") return df
     val cores = s.sparkContext.defaultParallelism
     fanOutKey.get(name) match {
       // split probe caveat: getNumPartitions counts planned byte-range
@@ -114,7 +111,7 @@ object SparkEntry {
 
   /** events.parquet carries INT64-nanos timestamps (see
     * EventStream.normalizeTs); requires spark.sql.legacy.parquet.nanosAsLong
-    * on the session (set in Verify/Bench). */
+    * on the session (set by Sessions.create). */
   private def events(s: SparkSession, dir: String): DataFrame =
     EventStream.normalizeTs(t(s, dir, "events"))
 
@@ -774,6 +771,22 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     TpchGraph.customerDocs(spark, "/root/testdata/sf0.001")
+
+  /** The part of [[queries]] a run selects by name (Bench's
+    * `SPARK_GRAFT_BENCH_ONLY`, Verify's `SPARK_GRAFT_ONLY`, Explain's
+    * argv): names are trimmed, blanks dropped, and no name at all selects
+    * every query. An unknown name fails here, before any Spark work, and
+    * the message lists every unknown name — a typo must not silently
+    * shrink the run. */
+  def selectQueries(names: Seq[String])
+      : Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    val wanted = names.map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = wanted.filterNot(all.contains).toSeq.sorted
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.mkString(", ")}")
+    if (wanted.isEmpty) all else all.filter(kv => wanted(kv._1))
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- tube-parity: full pipelines ------------------------------------
@@ -2347,14 +2360,12 @@ object SparkEntry {
       // |V|-sized pass then yields n_nodes AND d_sum in a single
       // aggregation — the separate nNodes exchange drops out. Every comm
       // node has >= 1 edge (comm labels exactly the pair endpoints), so
-      // the left join's coalesce(0) branch is unreachable and the old
-      // inner-join semantics are preserved.
+      // the inner join drops no node: it is the oracle's `nn JOIN deg`.
       val nodeDeg = und.select(explode(array(col("u"), col("v"))).as("id"))
         .groupBy(col("id")).agg(count(lit(1)).as("_deg"))
-      val cells = comm.join(nodeDeg, Seq("id"), "left")
+      val cells = comm.join(nodeDeg, Seq("id"))
         .groupBy(col("community"))
-        .agg(count(lit(1)).as("n_nodes"),
-          sum(coalesce(col("_deg"), lit(0L))).as("d_sum"))
+        .agg(count(lit(1)).as("n_nodes"), sum(col("_deg")).as("d_sum"))
         .join(eIn, Seq("community"), "left")
         .crossJoin(broadcast(mm))
         .select(col("community"), col("n_nodes"),

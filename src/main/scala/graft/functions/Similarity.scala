@@ -1322,32 +1322,6 @@ object Similarity {
     out
   }
 
-  /** Greedy BEAM SEARCH over a k-NN graph — the SERVING path of graph
-    * ANN (the HNSW/NSG query loop, single-layer): start every query at
-    * a deterministic SET of entry points — the md5-min corpus id per
-    * LSH bucket ([[rhpSignature]], the same `bits`/`dim` family the
-    * graph build's init used) — then `steps` unrollable rounds of
-    * expand-neighbors → score → keep the best `beamWidth` by
-    * (sim DESC, id ASC). Multi-entry is the recall safety net a greedy
-    * graph walk needs: a single global entry point makes any
-    * disconnected (or merely badly-linked) graph region unreachable and
-    * recall cliffs silently; one md5-min per LSH bucket seeds every
-    * coarse direction of the space for at most 2^bits extra beam rows
-    * in round 1, after which the beamWidth cut applies as usual. The
-    * simplification vs the textbook loop is declared: no visited-set
-    * (each round re-ranks beam ∪ neighbors(beam), which is monotone
-    * non-worsening and keeps the computation a pure function SQL can
-    * unroll), fixed rounds instead of convergence.
-    *
-    * Scale shape: the graph is the big artifact; the search is tiny —
-    * per query per round ≤ beamWidth·(k+1) candidates (round 1:
-    * ≤ 2^bits·(k+1)), expanded by one equi-join against the graph and
-    * scored against the broadcast query vectors. The entry set is a
-    * ≤ 2^bits-row aggregate of one corpus scan, computed once and
-    * broadcast. No corpus scan at query time beyond that: that is the
-    * whole point of serving from a graph.
-    *
-    * Output: (query_id, rank, neighbor_id, sim), self-matches excluded. */
   /** DELETE vectors from a persisted kNN graph — [[appendToGraph]]'s
     * inverse, completing the takedown family (groups/datacard/LSH/IVF/
     * Merkle all have deletes; HLL is documented non-deletable). Expressed
@@ -1392,6 +1366,32 @@ object Similarity {
       bits, dim, initWindow, buildK)
   }
 
+  /** Greedy BEAM SEARCH over a k-NN graph — the SERVING path of graph
+    * ANN (the HNSW/NSG query loop, single-layer): start every query at
+    * a deterministic SET of entry points — the md5-min corpus id per
+    * LSH bucket ([[rhpSignature]], the same `bits`/`dim` family the
+    * graph build's init used) — then `steps` unrollable rounds of
+    * expand-neighbors → score → keep the best `beamWidth` by
+    * (sim DESC, id ASC). Multi-entry is the recall safety net a greedy
+    * graph walk needs: a single global entry point makes any
+    * disconnected (or merely badly-linked) graph region unreachable and
+    * recall cliffs silently; one md5-min per LSH bucket seeds every
+    * coarse direction of the space for at most 2^bits extra beam rows
+    * in round 1, after which the beamWidth cut applies as usual. The
+    * simplification vs the textbook loop is declared: no visited-set
+    * (each round re-ranks beam ∪ neighbors(beam), which is monotone
+    * non-worsening and keeps the computation a pure function SQL can
+    * unroll), fixed rounds instead of convergence.
+    *
+    * Scale shape: the graph is the big artifact; the search is tiny —
+    * per query per round ≤ beamWidth·(k+1) candidates (round 1:
+    * ≤ 2^bits·(k+1)), expanded by one equi-join against the graph and
+    * scored against the broadcast query vectors. The entry set is a
+    * ≤ 2^bits-row aggregate of one corpus scan, computed once and
+    * broadcast. No corpus scan at query time beyond that: that is the
+    * whole point of serving from a graph.
+    *
+    * Output: (query_id, rank, neighbor_id, sim), self-matches excluded. */
   def graphBeamSearch(graph: DataFrame, corpus: DataFrame, idCol: String,
                       vecCol: String, queries: DataFrame, queryId: String,
                       queryVec: String, k: Int, beamWidth: Int,

@@ -40,7 +40,6 @@ final case class GraphSchema(nodes: Seq[NodeDef], links: Seq[LinkDef]) {
     links.find(l => l.child == child && l.parent == parent).getOrElse(
       throw new NoSuchElementException(s"edge $child->$parent"))
   def parentsOf(child: String): Seq[LinkDef] = links.filter(_.child == child)
-  def childrenOf(parent: String): Seq[LinkDef] = links.filter(_.parent == parent)
   /** doc-key column name for a label — reference injects `_{label}_id`
     * (tube/etl/indexers/base/translator.py:160-168). */
   def idCol(label: String): String = s"_${label}_id"
@@ -74,15 +73,5 @@ object Types {
         case other            => ArrayType(other)
       }
     case _ => itemType
-  }
-
-  /** JSON-schema scalar name → Spark type (reference: tube/utils/
-    * spark.py:88-117). */
-  def fromJsonSchemaName(name: String): DataType = name match {
-    case "number"  => FloatType
-    case "integer" => LongType
-    case "boolean" => BooleanType
-    case "array"   => ArrayType(StringType)
-    case _         => StringType
   }
 }

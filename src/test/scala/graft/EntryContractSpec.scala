@@ -18,6 +18,19 @@ class EntryContractSpec extends AnyFunSuite {
       s"oracle or document why): ${(q -- o).toSeq.sorted}")
   }
 
+  test("selectQueries: no name selects all; unknown names fail, all listed") {
+    assert(SparkEntry.selectQueries(Nil).keySet === SparkEntry.queries.keySet)
+    assert(SparkEntry.selectQueries(Seq(" ", "")).size ===
+      SparkEntry.queries.size)
+    val picked = Seq(" graph_bfs", "tube_customer_doc ", "tube_customer_doc")
+    assert(SparkEntry.selectQueries(picked).keySet ===
+      Set("graph_bfs", "tube_customer_doc"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selectQueries(Seq("graph_bfs", "no_such_b", "no_such_a")))
+    assert(e.getMessage.contains("no_such_a, no_such_b"))
+    assert(!e.getMessage.contains("graph_bfs"))
+  }
+
   test("SparkEntry source declares each query and oracle key exactly once") {
     val src = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")), "UTF-8")

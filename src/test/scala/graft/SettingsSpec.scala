@@ -66,13 +66,24 @@ class SettingsSpec extends AnyFunSuite {
 
   test("sparkTuning: SPARK_MASTER/memory env-driven, memory absent by default") {
     val t0 = Settings.sparkTuning(Map("SPARK_GRAFT_CPUS" -> "4"))
-    assert(t0.master === "local[4]")
+    assert(t0.master === "local[4]" && t0.cpus === 4)
     assert(t0.executorMemory.isEmpty && t0.driverMemory.isEmpty)
     val t1 = Settings.sparkTuning(Map("SPARK_MASTER" -> "spark://m:7077",
       "SPARK_EXECUTOR_MEMORY" -> "8g", "SPARK_DRIVER_MEMORY" -> "2g"))
     assert(t1.master === "spark://m:7077")
     assert(t1.executorMemory === Some("8g"))
     assert(t1.driverMemory === Some("2g"))
+  }
+
+  test("sparkTuning: SPARK_GRAFT_CPUS defaults to the available processors; a non-positive-int value fails naming it") {
+    val n = Runtime.getRuntime.availableProcessors
+    val t = Settings.sparkTuning(Map.empty)
+    assert(t.master === s"local[$n]" && t.cpus === n)
+    for (bad <- Seq("0", "x", "-2", "1.5")) {
+      val e = intercept[IllegalArgumentException](
+        Settings.sparkTuning(Map("SPARK_GRAFT_CPUS" -> bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), bad)
+    }
   }
 
   test("RunEtl.resolveInputs: positional wins; 2-arg form pulls schema from DICTIONARY_URL and mapping from the search path") {

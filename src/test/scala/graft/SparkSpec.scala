@@ -7,15 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark
   * session startup dominates test wall-clock otherwise). */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-    .appName("graft-test")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Sessions.create("graft-test", Map("SPARK_GRAFT_CPUS" -> "4"))
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
